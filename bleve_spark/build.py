@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import codec
 from .analysis.udfs import ANALYZED_ROW_SCHEMA, make_analyzed_rows_fn
+from .index import parquet_files, read_parquet
 from .mapping import IndexMapping
 
 DEFAULT_BLOCK_SHIFT = 10  # docid-range span per posting block = 1024
@@ -274,12 +275,7 @@ def _parquet_rows(path: str) -> int:
     partition subdirectories (postings are partitionBy(tbucket))."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return total
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in parquet_files(path))
 
 
 # -- directory-level postings pruning ----------------------------------------
@@ -532,7 +528,7 @@ class IndexBuilder:
             self._mark_stage("docs", fingerprint)
             report.add("docs", _parquet_rows(self._stage_dir("docs")), (time.time() - t0) * 1e3)
 
-        docs = spark.read.parquet(self._stage_dir("docs"))
+        docs = read_parquet(spark, self._stage_dir("docs"))
 
         # stage 2: analyze (the expensive pandas-UDF pass) -----------------
         # ALL text fields analyzed in ONE mapInPandas pass over docs,
@@ -579,7 +575,7 @@ class IndexBuilder:
                 (time.time() - t0) * 1e3,
             )
 
-        analyzed = spark.read.parquet(self._stage_dir("analyzed"))
+        analyzed = read_parquet(spark, self._stage_dir("analyzed"))
 
         # stage 3: norms (the term=NULL marker rows) -----------------------
         if not (resume and self._stage_done("norms", fingerprint)):
@@ -653,10 +649,11 @@ class IndexBuilder:
                 else:
                     # empty postings (vector/geo/numeric-only index): a
                     # partitionBy write of 0 rows emits NO files, which
-                    # a later read cannot infer a schema from — write
-                    # the flat empty parquet (one 0-row footer file)
-                    # and no marker, like a pre-tbucket index
-                    blocks.drop("tbucket").limit(0).write.mode(
+                    # a later read cannot take a schema from — write
+                    # the flat empty parquet (one 0-row footer file
+                    # carrying POSTINGS_SCHEMA) and no marker, like a
+                    # pre-tbucket index
+                    spark.createDataFrame([], POSTINGS_SCHEMA).write.mode(
                         "overwrite"
                     ).parquet(pdir)
             else:
@@ -667,7 +664,7 @@ class IndexBuilder:
             self._mark_stage("postings", fingerprint)
             report.add("postings", _parquet_rows(self._stage_dir("postings")), (time.time() - t0) * 1e3)
 
-        postings = spark.read.parquet(self._stage_dir("postings"))
+        postings = read_parquet(spark, self._stage_dir("postings"))
 
         # stage 4: dictionary (from block rows — small relative to terms) --
         if not (resume and self._stage_done("dictionary", fingerprint)):
@@ -687,7 +684,7 @@ class IndexBuilder:
         # stage 5: field stats + global stats ------------------------------
         if not (resume and self._stage_done("stats", fingerprint)):
             t0 = time.time()
-            norms = spark.read.parquet(self._stage_dir("norms"))
+            norms = read_parquet(spark, self._stage_dir("norms"))
             fieldstats = norms.groupBy("field").agg(
                 F.count("*").alias("doc_count"),
                 F.sum("length").alias("total_len"),

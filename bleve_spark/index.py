@@ -5,16 +5,25 @@ The reference's IndexSnapshot/TermFieldReader analogue
 parquet tables plus tiny driver-side caches (doc count, per-field stats,
 per-term df lookups — the same two lookups bleve does per term at searcher
 construction, /root/reference/search/searcher/search_term.go:57-70).
+The caches, the dead-docid array and the table schemas are read from
+parquet footers and small tables with pyarrow, so a snapshot launches
+Spark jobs only for the scans a query actually runs (Delta Lake reads
+table metadata from its log the same way).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from functools import cached_property
 from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import codec
@@ -35,6 +44,58 @@ DECODED_SCHEMA = T.StructType(
 
 
 _U64_ZERO = np.uint64(0)
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+# what a reader needs of a tombstone row (files differ in nullability:
+# appends and rollback rewrites come from different plans)
+_TOMBSTONE_COLS = pa.schema([("seq", pa.int64()), ("docid", pa.int64())])
+
+
+def parquet_files(path: str) -> List[str]:
+    """Data files of the table at `path`, partition subdirectories
+    included, in a stable order (markers, _SUCCESS and .crc skipped)."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        out.extend(
+            os.path.join(root, f)
+            for f in sorted(files)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+    return out
+
+
+def _footer_schema(paths: Iterable[str]) -> Optional[T.StructType]:
+    """Spark schema of the tables at `paths`, from one file footer per
+    table: the union of their columns, first occurrence winning, as
+    Spark would read them with that schema (missing columns are null).
+    Partition columns are not in the footer; Spark's partition
+    discovery still appends them. None when a table has no file written
+    by Spark, so the read falls back to schema inference."""
+    fields: Dict[str, T.StructField] = {}
+    for path in paths:
+        files = parquet_files(path)
+        if not files:
+            return None
+        raw = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if raw is None:
+            return None
+        for f in T.StructType.fromJson(json.loads(raw)).fields:
+            fields.setdefault(f.name, f)
+    return T.StructType(list(fields.values())) if fields else None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """spark.read.parquet with the schema taken from the footers:
+    schema inference would launch a Spark job per read."""
+    schema = _footer_schema(paths)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 def _decode_batch_scoring(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -142,7 +203,12 @@ class SearchIndex:
     are unioned across segments and tombstoned docs are masked, the
     IndexSnapshot + deleted-bitmap analogue
     (ref: index/scorch/snapshot_index.go:81, README.md:108-133). A new
-    SearchIndex instance = a new MVCC snapshot."""
+    SearchIndex instance = a new MVCC snapshot.
+
+    Opening a snapshot and its metadata (doc count, field stats, term
+    stats, dead docids, table schemas) reads parquet footers and small
+    tables on the driver — no Spark job — like scorch's IndexSnapshot,
+    which keeps segment metadata in memory."""
 
     def __init__(
         self,
@@ -162,83 +228,105 @@ class SearchIndex:
         self.at_seq = at_seq
 
     @cached_property
-    def _seg_metas(self) -> list:
+    def _parts(self) -> List[dict]:
+        """The snapshot's table directories with the docid range each
+        holds: the visible segments of a segmented index, or the root
+        of a flat single-build index as one part at seq -1 (so every
+        tombstone outranks it). Empty when there is no index yet."""
         from .writer import segment_metas
 
         metas = segment_metas(self.index_path)
-        if self.at_seq is not None:
-            metas = [m for m in metas if m["seq"] <= self.at_seq]
-        return metas
+        if metas:
+            if self.at_seq is not None:
+                metas = [m for m in metas if m["seq"] <= self.at_seq]
+            return metas
+        stats = parquet_files(os.path.join(self.index_path, "stats"))
+        if not stats:
+            return []
+        n = int(pq.read_table(stats).column("doc_count")[0].as_py())
+        return [
+            {"seq": -1, "dir": self.index_path, "docid_start": 0, "docid_end": n}
+        ]
+
+    @cached_property
+    def _seg_metas(self) -> List[dict]:
+        return [m for m in self._parts if m["seq"] >= 0]
+
+    def _paths(self, name: str) -> List[str]:
+        return [os.path.join(m["dir"], name) for m in self._parts]
 
     def _table(self, name: str) -> DataFrame:
-        if self._seg_metas:
-            paths = [os.path.join(m["dir"], name) for m in self._seg_metas]
-            if name == "postings" and len(paths) > 1:
-                # each segment's postings dir is its own partitionBy
-                # (tbucket) root: a single multi-path read would try to
-                # discover ONE partition scheme across conflicting roots
-                # (CONFLICTING_DIRECTORY_STRUCTURES). Per-root scans
-                # unioned keep per-scan partition pruning; tiered merging
-                # bounds the segment count, so the union stays small.
-                from functools import reduce
+        """The raw table across the snapshot's parts, tombstoned rows
+        included."""
+        paths = self._paths(name)
+        if name == "postings" and len(paths) > 1:
+            # each segment's postings dir is its own partitionBy
+            # (tbucket) root: a single multi-path read would try to
+            # discover ONE partition scheme across conflicting roots
+            # (CONFLICTING_DIRECTORY_STRUCTURES). Per-root scans
+            # unioned keep per-scan partition pruning; tiered merging
+            # bounds the segment count, so the union stays small.
+            from functools import reduce
 
-                dfs = [self.spark.read.parquet(p) for p in paths]
-                return reduce(
-                    lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                    dfs,
-                )
-            return self.spark.read.parquet(*paths)
-        return self.spark.read.parquet(os.path.join(self.index_path, name))
+            return reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                [read_parquet(self.spark, p) for p in paths],
+            )
+        return read_parquet(self.spark, *paths)
 
     @cached_property
-    def _tombstones(self) -> Optional[DataFrame]:
-        d = os.path.join(self.index_path, "tombstones")
-        if not os.path.isdir(d) or not any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        ):
+    def _tombstones(self) -> Optional["pa.Table"]:
+        """(seq, docid) tombstone rows visible at this snapshot, or None
+        when the index has no tombstone files."""
+        files = parquet_files(os.path.join(self.index_path, "tombstones"))
+        if not files:
             return None
-        t = self.spark.read.parquet(d)
+        tables = []
+        for f in files:
+            pf = pq.ParquetFile(f)
+            if "docid" not in pf.schema_arrow.names:
+                raise ValueError(
+                    f"tombstone file {f} has no docid column: it was "
+                    "written by a version that resolved tombstones at "
+                    "read time; rebuild the index from its documents"
+                )
+            tables.append(pf.read(columns=["seq", "docid"]).cast(_TOMBSTONE_COLS))
+        t = pa.concat_tables(tables)
         if self.at_seq is not None:
-            t = t.where(F.col("seq") <= self.at_seq)
+            t = t.filter(pc.less_equal(t["seq"], self.at_seq))
         return t
 
-    def _doc_seq_col(self):
-        """docid -> owning segment seq (ranges from segment metas)."""
-        expr = F.lit(-1)
-        for m in self._seg_metas:
-            expr = F.when(
-                (F.col("docid") >= m["docid_start"])
-                & (F.col("docid") < m["docid_end"]),
-                F.lit(m["seq"]),
-            ).otherwise(expr)
-        return expr
+    @cached_property
+    def _dead_docids(self) -> np.ndarray:
+        """Sorted docids of the snapshot's dead docs. The writer
+        resolved each tombstone to the docids its _id had in segments
+        older than the tombstone's seq, so a docid is dead iff a
+        visible tombstone names it and a visible part still holds it
+        (merged-away segments leave their tombstones behind)."""
+        t = self._tombstones
+        if t is None:
+            return np.empty(0, dtype=np.int64)
+        docids = np.unique(t["docid"].to_numpy())
+        live = np.zeros(len(docids), dtype=bool)
+        for m in self._parts:
+            live |= (docids >= m["docid_start"]) & (docids < m["docid_end"])
+        return docids[live]
 
     @cached_property
-    def deleted_docids(self) -> Optional[DataFrame]:
-        """Docids masked by tombstones: doc is dead iff a tombstone with
-        seq > the doc's segment seq names its _id (upsert + delete)."""
-        if self._tombstones is None:
+    def _live_pred(self):
+        """Column predicate that masks dead docids, or None. A SQL IN
+        list: one parse on the JVM (a Column built by isin() costs one
+        py4j call per value), evaluated as a hash-set lookup."""
+        dead = self._dead_docids
+        if not len(dead):
             return None
-        raw = self._table("docs").select(
-            "docid", "_id", self._doc_seq_col().alias("__seq")
-        )
-        dead = (
-            raw.join(
-                self._tombstones.groupBy("_id").agg(
-                    F.max("seq").alias("__tomb_seq")
-                ),
-                "_id",
-            )
-            .where(F.col("__tomb_seq") > F.col("__seq"))
-            .select("docid")
-        )
-        return dead
+        return F.expr(f"docid NOT IN ({','.join(map(str, dead.tolist()))})")
 
     @cached_property
     def docs(self) -> DataFrame:
         d = self._table("docs")
-        if self.deleted_docids is not None:
-            d = d.join(self.deleted_docids, "docid", "left_anti")
+        if self._live_pred is not None:
+            d = d.where(self._live_pred)
         return d
 
     @cached_property
@@ -251,20 +339,13 @@ class SearchIndex:
         partitionBy(tbucket) with the SAME n (build.py stage 4). Any
         missing/odd marker disables the pruned path — correctness never
         depends on the layout."""
-        import json as _json
-
-        dirs = (
-            [os.path.join(m["dir"], "postings") for m in self._seg_metas]
-            if self._seg_metas
-            else [os.path.join(self.index_path, "postings")]
-        )
         from .build import TBUCKETS_MARKER
 
         ns = set()
-        for d in dirs:
+        for d in self._paths("postings"):
             try:
                 with open(os.path.join(d, TBUCKETS_MARKER)) as f:
-                    ns.add(int(_json.load(f)["n_tbuckets"]))
+                    ns.add(int(json.load(f)["n_tbuckets"]))
             except (OSError, ValueError, KeyError):
                 return None
         return ns.pop() if len(ns) == 1 else None
@@ -272,7 +353,7 @@ class SearchIndex:
     @cached_property
     def dictionary(self) -> DataFrame:
         d = self._table("dictionary")
-        if len(self._seg_metas) > 1:
+        if len(self._parts) > 1:
             # per-segment dictionaries merge by summation. Like scorch,
             # df/cf still count tombstoned docs until compaction
             # (deleted bitmaps do not rewrite dictionaries).
@@ -289,29 +370,20 @@ class SearchIndex:
     def doc_count(self) -> int:
         """Global N, live docs only (single-index semantics — the
         reference parity target, SURVEY.md §2.6 per-shard IDF caveat)."""
-        if self._seg_metas:
-            if self._tombstones is not None:
-                return self.docs.count()
-            return max(m["docid_end"] for m in self._seg_metas)
-        return int(self._table("stats").collect()[0]["doc_count"])
+        total = sum(m["docid_end"] - m["docid_start"] for m in self._parts)
+        return total - len(self._dead_docids)
 
     @cached_property
     def field_stats(self) -> Dict[str, dict]:
-        rows = self._table("fieldstats")
-        if len(self._seg_metas) > 1:
-            rows = rows.groupBy("field").agg(
-                F.sum("doc_count").alias("doc_count"),
-                F.sum("total_len").alias("total_len"),
-                (F.sum("total_len") / F.sum("doc_count")).alias("avg_len"),
-            )
-        return {
-            r["field"]: {
-                "doc_count": r["doc_count"],
-                "total_len": r["total_len"],
-                "avg_len": r["avg_len"],
-            }
-            for r in rows.collect()
-        }
+        merged: Dict[str, dict] = {}
+        for path in self._paths("fieldstats"):
+            for r in pq.read_table(parquet_files(path)).to_pylist():
+                st = merged.setdefault(r["field"], {"doc_count": 0, "total_len": 0})
+                st["doc_count"] += r["doc_count"]
+                st["total_len"] += r["total_len"]
+        for st in merged.values():
+            st["avg_len"] = st["total_len"] / st["doc_count"]
+        return merged
 
     def avg_len(self, field: str) -> float:
         st = self.field_stats.get(field)
@@ -319,24 +391,34 @@ class SearchIndex:
 
     # -- dictionary lookups (driver-side, tiny) ---------------------------
 
+    @cached_property
+    def _dictionary_ds(self) -> "ds.Dataset":
+        return ds.dataset(
+            [f for p in self._paths("dictionary") for f in parquet_files(p)],
+            format="parquet",
+        )
+
     def term_stats(self, field: str, terms: Iterable[str]) -> Dict[str, Tuple[int, int]]:
-        """term -> (df, cf). Equivalent of TermFieldReader.Count()
-        (ref: search/searcher/search_term.go:57-64). Memoized per
-        (field, term) — planner phases re-resolve the same terms and each
-        lookup is a driver-side Spark job."""
+        """term -> (df, cf), summed over the snapshot's parts. Equivalent
+        of TermFieldReader.Count() (ref: search/searcher/search_term.go:
+        57-64). Read on the driver with pyarrow: the dictionary files
+        are (field, term)-sorted, so row-group statistics skip all but
+        the row groups that can hold the terms. Memoized per
+        (field, term) — planner phases re-resolve the same terms."""
         if not hasattr(self, "_term_stats_cache"):
             self._term_stats_cache: Dict[Tuple[str, str], Optional[Tuple[int, int]]] = {}
         terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if (field, t) not in self._term_stats_cache]
         if missing:
-            rows = (
-                self.dictionary.where(
-                    (F.col("field") == field) & F.col("term").isin(missing)
-                )
-                .select("term", "df", "cf")
-                .collect()
-            )
-            found = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+            rows = self._dictionary_ds.to_table(
+                columns=["term", "df", "cf"],
+                filter=(pc.field("field") == field)
+                & pc.field("term").isin(missing),
+            ).to_pylist()
+            found: Dict[str, Tuple[int, int]] = {}
+            for r in rows:
+                df0, cf0 = found.get(r["term"], (0, 0))
+                found[r["term"]] = (df0 + int(r["df"]), cf0 + int(r["cf"]))
             for t in missing:
                 self._term_stats_cache[(field, t)] = found.get(t)
         return {
@@ -412,8 +494,8 @@ class SearchIndex:
             yield from _decode_blocks_iter(batches, need_positions)
 
         out = src.mapInPandas(gen, DECODED_SCHEMA)
-        if self.deleted_docids is not None:
+        if self._live_pred is not None:
             # mask tombstoned docs at the postings level — the
             # deleted-roaring-bitmap analogue (scorch README:213-218)
-            out = out.join(self.deleted_docids, "docid", "left_anti")
+            out = out.where(self._live_pred)
         return out

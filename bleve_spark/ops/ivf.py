@@ -96,8 +96,8 @@ def ivf_fit(
         F.col(vec_col).alias("v"),
         _content_hash(vec_col, seed).alias("hk"),
     )
-    pool = keyed.orderBy("hk").limit(int(sample))
-    pool = pool.persist()
+    cached = keyed.orderBy("hk").limit(int(sample)).persist()
+    pool = cached
     try:
         # ragged rows (wrong-dim vectors) must not seed centroids or
         # feed the means: resolve the sample's modal dimension and fit
@@ -158,7 +158,8 @@ def ivf_fit(
             cents = nxt
         return cents
     finally:
-        pool.unpersist()
+        # `pool` is rebound to a filtered view below the cache
+        cached.unpersist()
 
 
 def assign_cells(

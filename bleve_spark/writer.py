@@ -3,25 +3,34 @@
 Re-creates the reference's online index maintenance on top of the offline
 builder (SURVEY.md §2.1/§2.3): `Batch`/`Index` appends become immutable
 segments (/root/reference/index/scorch/scorch.go:365-443 — each batch
-becomes a zap segment), `Delete` becomes tombstones masked at read time
-(the deleted-roaring-bitmap analogue, index/scorch/README.md:108-133),
-and `compact()` is the merger (builder-style full k-way merge,
-index/scorch/builder.go:135-240 / mergeplan tiered compaction collapsed
-to one tier).
+becomes a zap segment), `Delete` becomes docid tombstones resolved at
+write time and masked at read time (the introducer computing each
+segment's deleted roaring bitmap, index/scorch/introducer.go and
+README.md:108-133; Iceberg positional deletes), and `compact()` is the
+merger (builder-style full k-way merge, index/scorch/builder.go:135-240
+/ mergeplan tiered compaction collapsed to one tier).
 
 Layout under index_path:
     segments/seg-00000/        full table set (IndexBuilder output)
     segments/seg-00000/_SEGMENT.json   {seq, docid_start, docid_end}
-    tombstones/                parquet (_id string, seq long)
+    tombstones/                parquet (_id string, seq long, docid long)
 
 Docids are globally unique: segment k's docids start at the previous
 segment's docid_end (snapshot offsets, snapshot_index.go:475-480), so
 posting blocks from different segments never alias a docid range.
 
 Visibility rule: a doc in segment s is dead iff a tombstone with
-seq > s names its `_id`. batch_index(seq=k) tombstones incoming ids at
-seq k — upsert semantics: older versions die, the new segment (seq k)
-survives. delete() writes tombstones at seq = current segment count.
+seq > s names its `_id`. The writer applies the rule when it writes a
+tombstone at seq k: it joins the ids to the docs of the segments with
+seq < k and appends one (_id, k, docid) row per doc found, so a reader
+only masks the docids of the tombstones it can see (seq <= at_seq) that
+fall in a segment it can see — no join, no Spark job (index.py).
+batch_index(seq=k) tombstones incoming ids at seq k — upsert semantics:
+older versions die, the new segment (seq k) survives. delete() writes
+tombstones at seq = the next segment seq, so a later re-add survives.
+Merged segments get a fresh seq and docid range holding only live docs:
+no tombstone written before the merge names them, and the tombstones of
+the retired segments' docids fall outside every live range.
 """
 
 from __future__ import annotations
@@ -32,9 +41,12 @@ import shutil
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Sequence
 
+import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import BuildReport, IndexBuilder
+from .index import SearchIndex, parquet_files, read_parquet
 from .mapping import IndexMapping
 
 SEG_PREFIX = "seg-"
@@ -155,12 +167,28 @@ class IndexWriter:
         offset = max((m["docid_end"] for m in metas), default=0)
         return seq, offset
 
-    def _write_tombstones(self, ids_df: DataFrame, seq: int):
-        (
-            ids_df.select(
-                F.col("_id").cast("string").alias("_id"),
-                F.lit(seq).cast("long").alias("seq"),
+    def _seal_segment(self, seg_dir: str, seq: int, offset: int) -> None:
+        """Write the segment's _SEGMENT.json; its doc count comes from
+        the stats table, read on the driver."""
+        stats = pq.read_table(parquet_files(os.path.join(seg_dir, "stats")))
+        n = int(stats.column("doc_count")[0].as_py())
+        with open(os.path.join(seg_dir, "_SEGMENT.json"), "w") as f:
+            json.dump(
+                {"seq": seq, "docid_start": offset, "docid_end": offset + n}, f
             )
+
+    def _write_tombstones(self, ids_df: DataFrame, seq: int):
+        """Resolve `ids_df`'s ids to the docids they hold in the parts
+        older than `seq` and append them as (_id, seq, docid) rows."""
+        older = SearchIndex(
+            self.spark, self.index_path, self.mapping, at_seq=seq - 1
+        )
+        if not older._parts:
+            return
+        (
+            ids_df.select(F.col("_id").cast("string").alias("_id"))
+            .join(older._table("docs").select("_id", "docid"), "_id")
+            .select("_id", F.lit(seq).cast("long").alias("seq"), "docid")
             .write.mode("append")
             .parquet(self._tomb_dir())
         )
@@ -178,26 +206,15 @@ class IndexWriter:
         report = builder.build(
             df, id_expr=id_expr, resume=False, docid_offset=offset
         )
-        n = int(
-            self.spark.read.parquet(os.path.join(seg_dir, "stats"))
-            .collect()[0]["doc_count"]
-        )
-        with open(os.path.join(seg_dir, "_SEGMENT.json"), "w") as f:
-            json.dump(
-                {"seq": seq, "docid_start": offset, "docid_end": offset + n},
-                f,
-            )
-        if seq > 0:
-            # upsert: kill older versions of the incoming ids
-            ids = self.spark.read.parquet(
-                os.path.join(seg_dir, "docs")
-            ).select("_id")
-            self._write_tombstones(ids, seq)
+        self._seal_segment(seg_dir, seq, offset)
+        # upsert: kill older versions of the incoming ids
+        ids = read_parquet(self.spark, os.path.join(seg_dir, "docs"))
+        self._write_tombstones(ids.select("_id"), seq)
         return report
 
     def delete(self, ids) -> None:
         """Tombstone ids across all current segments
-        (ref: index.go:85-89)."""
+        (ref: index.go:85-89). Ids no segment holds write nothing."""
         seq, _ = self._next_seq_and_offset()
         if isinstance(ids, DataFrame):
             ids_df = ids.select(F.col(ids.columns[0]).alias("_id"))
@@ -218,8 +235,6 @@ class IndexWriter:
         incremental writers no longer pay a full rebuild per compaction
         (contrast compact()). Returns the executed merge plans (lists
         of retired seqs)."""
-        from .index import SearchIndex
-
         idx = searcher_index or SearchIndex(
             self.spark, self.index_path, self.mapping
         )
@@ -227,19 +242,14 @@ class IndexWriter:
         seg_sizes = {
             s: m["docid_end"] - m["docid_start"] for s, m in metas.items()
         }
-        dead_counts: Dict[int, int] = {}
-        if idx.deleted_docids is not None:
-            seq_col = idx._doc_seq_col()
-            dead_counts = {
-                int(r["__seq"]): int(r["cnt"])
-                for r in idx.deleted_docids.join(
-                    idx._table("docs").select("docid"), "docid"
-                )
-                .select(seq_col.alias("__seq"))
-                .groupBy("__seq")
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            }
+        dead = idx._dead_docids
+        dead_counts = {
+            s: int(
+                np.searchsorted(dead, m["docid_end"])
+                - np.searchsorted(dead, m["docid_start"])
+            )
+            for s, m in metas.items()
+        }
         plans = plan_merges(seg_sizes, opts, dead_counts)
         for seqs in plans:
             self._merge_segments(seqs, metas, idx)
@@ -267,19 +277,7 @@ class IndexWriter:
         builder.build(
             live, id_expr=F.col("_id"), resume=False, docid_offset=offset
         )
-        n = int(
-            self.spark.read.parquet(os.path.join(seg_dir, "stats"))
-            .collect()[0]["doc_count"]
-        )
-        with open(os.path.join(seg_dir, "_SEGMENT.json"), "w") as f:
-            json.dump(
-                {
-                    "seq": new_seq,
-                    "docid_start": offset,
-                    "docid_end": offset + n,
-                },
-                f,
-            )
+        self._seal_segment(seg_dir, new_seq, offset)
         for s in seqs:
             shutil.rmtree(metas[s]["dir"], ignore_errors=True)
 
@@ -321,8 +319,6 @@ class IndexWriter:
         """Merge all segments minus tombstones into one fresh segment —
         the merger/mergeplan analogue collapsed to a single tier
         (ref: index/scorch/merge.go, mergeplan/merge_plan.go:67-135)."""
-        from .index import SearchIndex
-
         idx = searcher_index or SearchIndex(
             self.spark, self.index_path, self.mapping
         )
@@ -332,12 +328,7 @@ class IndexWriter:
         seg_dir = os.path.join(tmp, f"{SEG_PREFIX}00000")
         builder = IndexBuilder(self.spark, self.mapping, seg_dir)
         report = builder.build(live, id_expr=F.col("_id"), resume=False)
-        n = int(
-            self.spark.read.parquet(os.path.join(seg_dir, "stats"))
-            .collect()[0]["doc_count"]
-        )
-        with open(os.path.join(seg_dir, "_SEGMENT.json"), "w") as f:
-            json.dump({"seq": 0, "docid_start": 0, "docid_end": n}, f)
+        self._seal_segment(seg_dir, 0, 0)
         # swap in the compacted segment set (on Iceberg this is the
         # atomic snapshot commit; here: directory swap)
         old = os.path.join(self.index_path, "segments")

@@ -84,12 +84,40 @@ def test_cli_dump(cli_index, capsys):
     assert {"red", "fox", "runs", "fast"} <= terms
 
 
-def test_cli_check_clean_and_corrupt(cli_index, capsys):
+def test_cli_check_clean_and_corrupt(spark, cli_index, capsys):
     out = run_cli(
         capsys, "check", "--index", cli_index, "--mapping", "dynamic",
         "--count", "5",
     )
     assert json.loads(out.splitlines()[-1])["problems"] == 0
+
+    # an upsert and a delete write docid tombstones; the index stays
+    # consistent (invariants 3 and 4 run on them)
+    from bleve_spark import Index
+
+    updated = f"{BASE}/updated"
+    shutil.copytree(cli_index, updated)
+    ix = Index(spark, updated)
+    ix.batch([{"_id": "d0", "body": "red fox rests"}])
+    ix.delete("d1")
+    out = run_cli(
+        capsys, "check", "--index", updated, "--mapping", "dynamic",
+        "--count", "5",
+    )
+    assert json.loads(out.splitlines()[-1])["problems"] == 0
+    assert ix.doc_count() == 3
+
+    # a tombstone naming a docid that holds another _id trips check
+    stored = ix.reader()._table("docs").where("_id = 'd2'").first()
+    spark.createDataFrame(
+        [("d3", 99, stored["docid"])], "_id string, seq long, docid long"
+    ).write.mode("append").parquet(f"{updated}/tombstones")
+    with pytest.raises(SystemExit):
+        spark_job.main(
+            ["check", "--index", updated, "--mapping", "dynamic",
+             "--count", "2"]
+        )
+    assert "tombstones name a docid" in capsys.readouterr().out
 
     # corrupt a segment meta: shrink its docid range -> check trips
     broken = f"{BASE}/broken"

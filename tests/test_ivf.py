@@ -37,6 +37,15 @@ def test_fit_is_deterministic(spark, corpus):
     np.testing.assert_allclose(a, b)
 
 
+def test_fit_releases_its_sample_cache(spark, corpus):
+    # the hash-sample is cached for the fit; the fit must unpersist that
+    # cached frame, not the dim-filtered view derived from it
+    df, _ = corpus
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    ivf.ivf_fit(df, n_cells=8, iters=2, seed=5)
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
+
+
 def test_fit_rejects_more_cells_than_sample(spark, corpus):
     df, _ = corpus
     with pytest.raises(ValueError, match="n_cells"):

@@ -281,7 +281,10 @@ def cmd_check(args):
        check), over --count sampled terms per field
     2. segment metas: docid ranges disjoint, doc counts match the
        stored table, seqs unique
-    3. tombstones only ever mask docs that exist in some segment
+    3. every tombstone (_id, seq, docid) whose docid lies in a live
+       segment names the doc stored at that docid, in a segment older
+       than the tombstone (tombstones of merged-away segments are
+       ignored)
     4. live doc_count == distinct live docids
     """
     from pyspark.sql import functions as F
@@ -299,9 +302,9 @@ def cmd_check(args):
     problems = []
 
     # 1. dictionary-vs-search parity per field. Like scorch, dictionary
-    # df still counts tombstoned docs until compaction, so with live
-    # tombstones the invariant is total <= df; without, total == df.
-    has_tombstones = idx._tombstones is not None
+    # df still counts tombstoned docs until compaction, so with dead
+    # docs the invariant is total <= df; without, total == df.
+    has_tombstones = len(idx._dead_docids) > 0
     fields = [args.field] if args.field else sorted(idx.field_stats)
     searcher = Searcher(idx)
     for fld in fields:
@@ -376,16 +379,36 @@ def cmd_check(args):
                 f"[{m['docid_start']},{m['docid_end']})"
             )
 
-    # 3. tombstones reference existing doc ids
-    tomb = idx._tombstones
-    if tomb is not None:
-        all_ids = idx._table("docs").select("_id")
-        orphans = (
-            tomb.select("_id").distinct().join(all_ids, "_id", "left_anti")
-        ).count()
-        if orphans:
+    # 3. tombstones name the docs they mask
+    if idx._tombstones is not None:
+        from bleve_spark.index import read_parquet
+
+        seg_of = F.lit(None)
+        for m in idx._parts:
+            seg_of = F.when(
+                (F.col("docid") >= m["docid_start"])
+                & (F.col("docid") < m["docid_end"]),
+                F.lit(m["seq"]),
+            ).otherwise(seg_of)
+        tomb = read_parquet(spark, os.path.join(args.index, "tombstones"))
+        stored = idx._table("docs").select(
+            "docid", F.col("_id").alias("__stored_id")
+        )
+        bad = (
+            tomb.withColumn("__seg", seg_of)
+            .where(F.col("__seg").isNotNull())
+            .join(stored, "docid", "left")
+            .where(
+                F.col("__stored_id").isNull()
+                | (F.col("__stored_id") != F.col("_id"))
+                | (F.col("seq") <= F.col("__seg"))
+            )
+            .count()
+        )
+        if bad:
             problems.append(
-                f"{orphans} tombstoned ids never existed in any segment"
+                f"{bad} tombstones name a docid that does not hold their "
+                "_id in a segment older than the tombstone"
             )
 
     # 4. live doc count == distinct docids
